@@ -129,8 +129,7 @@ def build_base_warehouse(spark, cache_dir: str) -> None:
     from kiwi_spark.sources.pages import pages_df
 
     target = base_dir(cache_dir)
-    building = target + ".building"
-    shutil.rmtree(building, ignore_errors=True)
+    building = f"{target}.building-{os.getpid()}"
     pages = os.path.join(building, "base_pages")
     pages_df(
         spark, KG_BASE_PAGES, seed=KG_BASE_WORLD, partitions=KG_BASE_FILES
@@ -145,8 +144,10 @@ def build_base_warehouse(spark, cache_dir: str) -> None:
     }
     with open(os.path.join(building, "base.json"), "w") as fh:
         json.dump(meta, fh)
-    shutil.rmtree(target, ignore_errors=True)
-    os.replace(building, target)
+    try:
+        os.replace(building, target)
+    except OSError:  # a concurrent run published the same build first
+        shutil.rmtree(building, ignore_errors=True)
 
 
 def _h(seed: int, tag: str, *cols):

@@ -198,8 +198,9 @@ def main(argv=None) -> int:
         return 2
     build_fn, is_built, setup_fn, pass_fn = WORKLOADS[args.workload]
     cache_dir = os.path.join(HERE, ".work", "cache")
-    work_dir = os.path.join(HERE, ".work", "build" if args.build else args.workload)
-    shutil.rmtree(work_dir, ignore_errors=True)
+    # per-process scratch, so concurrent runs in one checkout do not collide
+    work_dir = os.path.join(
+        HERE, ".work", f"{'build' if args.build else args.workload}-{os.getpid()}")
     os.makedirs(work_dir)
     # Python workers inherit the driver's environment in local mode
     os.environ["PYTHONPATH"] = os.pathsep.join(
@@ -213,6 +214,7 @@ def main(argv=None) -> int:
             build_fn(spark, cache_dir)
         finally:
             stop_session(spark)
+            shutil.rmtree(work_dir, ignore_errors=True)
         return 0
     if build_fn and not is_built(cache_dir):
         # per-checkout build in its own process, so that the measured run
@@ -298,6 +300,7 @@ def main(argv=None) -> int:
         "failed": rec.failed,
         "metrics": {k: {"value": float(metrics[k]), "unit": units[k]} for k in units},
     }
+    shutil.rmtree(work_dir, ignore_errors=True)
     print(json.dumps(result))
     return 0
 
