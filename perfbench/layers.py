@@ -258,19 +258,21 @@ def per_layer(spans, jobs_by_span, samples: dict, values: dict) -> dict:
         s.duration for s in by_name.get("sources.catalog.compact", []))
 
     doc_entities = _med(samples, "doc_entities")
-    for prefix, span_name, sample_key, legs, leg_prefix, leg_sample in (
-        ("operators.delta_link", "operators.delta_link.delta_relink",
-         "add_touched_entities", DELTA_LINK_LEGS, "relink", "delta_link.relink"),
-        ("operators.delta_remove", "operators.delta_remove.delta_unlink",
-         "remove_touched_entities", DELTA_REMOVE_LEGS, "remove", "delta_remove.remove"),
+    for layer, total, span_name, touched_key, leg_prefix, legs in (
+        ("delta_link", "relink_s", "operators.delta_link.delta_relink",
+         "add_touched_entities", "relink", DELTA_LINK_LEGS),
+        ("delta_remove", "unlink_s", "operators.delta_remove.delta_unlink",
+         "remove_touched_entities", "remove", DELTA_REMOVE_LEGS),
     ):
-        total = "relink_s" if leg_prefix == "relink" else "unlink_s"
+        prefix = f"operators.{layer}"
         out[f"{prefix}.{total}"] = sum(s.duration for s in by_name.get(span_name, []))
-        touched = _med(samples, sample_key)
+        touched = _med(samples, touched_key)
         out[f"{prefix}.touched_entities"] = touched
         out[f"{prefix}.touched_ratio"] = touched / doc_entities if doc_entities else 0.0
         for leg in legs:
-            out[f"{prefix}.{leg_prefix}_{leg}_s"] = _med(samples, f"{leg_sample}_{leg}")
+            # the sub-leg timings the program returns, as the workload stored them
+            out[f"{prefix}.{leg_prefix}_{leg}_s"] = _med(
+                samples, f"{layer}.{leg_prefix}_{leg}")
 
     trigram = by_name.get("plans.search_index", [])
     out["plans.search_index.s"] = sum(s.duration for s in trigram)

@@ -126,3 +126,35 @@ def test_wall_accounting_splits_pipeline_wall():
     assert acc["unattributed_s"] == pytest.approx(3)
     assert acc["unattributed_s"] + acc["children_union_s"] == pytest.approx(10)
     assert acc["descendant_self_s"] == pytest.approx(3 + 3 + 2 + 1)
+
+
+def test_per_layer_metrics_from_spans_and_samples():
+    import layers
+
+    spans = [
+        Span(1, "pipeline.incremental_add", None, 0.0, 10.0),
+        Span(2, "sources.catalog.commit", 1, 1.0, 2.0,
+             attrs={"table": "text", "tags": ("operators.extract_text",)}),
+        Span(3, "operators.delta_link.delta_relink", 1, 3.0, 9.0),
+        Span(4, "sources.catalog.commit", 3, 4.0, 5.0,
+             attrs={"table": "id_map", "tags": ("operators.link.id_map",),
+                    "bytes": 100, "files": 2}),
+        Span(5, "sources.catalog.read", 3, 5.0, 5.5, attrs={"dirs": 3, "deletes": 2}),
+    ]
+    samples = {"add_touched_entities": [400], "doc_entities": [1600],
+               "delta_link.relink_touched": [1.5]}
+    out = layers.per_layer(spans, {}, samples, {"pages_extracted": 20})
+    assert set(out) == {name for name, _ in layers.PER_LAYER}
+    assert out["pipeline.wall_s"] == pytest.approx(10)
+    assert out["pipeline.unattributed_s"] == pytest.approx(3)
+    assert out["operators.extract_text.busy_s"] == pytest.approx(1)
+    assert out["operators.extract_text.pages_per_s"] == pytest.approx(20)
+    assert out["operators.link.id_map_s"] == pytest.approx(1)
+    assert out["operators.delta_link.relink_s"] == pytest.approx(6)
+    assert out["operators.delta_link.touched_ratio"] == pytest.approx(0.25)
+    assert out["operators.delta_link.relink_touched_s"] == pytest.approx(1.5)
+    assert out["sources.catalog.commits"] == 2
+    assert out["sources.catalog.bytes_written"] == 100
+    assert out["sources.catalog.read_dirs_max"] == 3
+    assert out["sources.catalog.delete_chain_max"] == 2
+    assert out["operators.dedup.s"] == 0
