@@ -61,27 +61,30 @@ def write_batch(spark, out_dir: str, seed: int) -> str:
     return path
 
 
-def _source_key(repo_root: str) -> str:
-    """Hash of the program's sources and the base-input constants: a cached
-    base warehouse is reused only by the code that built it."""
-    digest = hashlib.sha256(
-        repr((BASE_FORMAT, KG_BASE_WORLD, KG_BASE_PAGES, KG_BASE_FILES, N_BUCKETS)).encode()
-    )
-    package = os.path.join(repo_root, "kiwi_spark")
-    for root, dirs, names in os.walk(package):
-        dirs.sort()
-        for name in sorted(names):
-            if name.endswith(".py"):
-                path = os.path.join(root, name)
-                digest.update(os.path.relpath(path, package).encode())
-                with open(path, "rb") as fh:
-                    digest.update(fh.read())
+def source_key(repo_root: str, *dirs: str, salt: str = "") -> str:
+    """Hash of ``salt`` and the ``.py`` files under ``dirs`` (relative to
+    ``repo_root``; a file name is hashed as it stands)."""
+    digest = hashlib.sha256(salt.encode())
+    for top in dirs:
+        top = os.path.join(repo_root, top)
+        paths = [top] if os.path.isfile(top) else [
+            os.path.join(root, name)
+            for root, _dirs, names in sorted(os.walk(top))
+            for name in sorted(names) if name.endswith(".py")
+        ]
+        for path in paths:
+            digest.update(os.path.relpath(path, repo_root).encode())
+            with open(path, "rb") as fh:
+                digest.update(fh.read())
     return digest.hexdigest()[:16]
 
 
 def base_dir(cache_dir: str) -> str:
+    """A cached base warehouse is reused only by the code and base-input
+    constants that built it."""
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    return os.path.join(cache_dir, f"kg_base-{_source_key(repo_root)}")
+    salt = repr((BASE_FORMAT, KG_BASE_WORLD, KG_BASE_PAGES, KG_BASE_FILES, N_BUCKETS))
+    return os.path.join(cache_dir, f"kg_base-{source_key(repo_root, 'kiwi_spark', salt=salt)}")
 
 
 def base_warehouse(cache_dir: str) -> dict | None:

@@ -88,7 +88,7 @@ PER_LAYER = [
     ("bench.traced_op_s", "s"),
     ("bench.peak_rss_mb", "MB"),
     ("bench.docs_per_s", "docs/s"),
-    ("bench.call_p50_ms", "ms"),
+    ("bench.call_ms", "ms"),
 ]
 
 
@@ -220,10 +220,9 @@ def per_layer(spans, jobs_by_span, samples: dict, values: dict) -> dict:
         return list(out.values())
 
     out = {name: 0.0 for name, _ in PER_LAYER}
-    own = self_times(spans)
-    runs = [s for n in PIPELINE_SPANS for s in by_name.get(n, [])]
-    out["pipeline.wall_s"] = sum(s.duration for s in runs)
-    out["pipeline.unattributed_s"] = sum(own[s.id] for s in runs)
+    acc = wall_accounting(spans)
+    out["pipeline.wall_s"] = acc["pipeline_wall_s"]
+    out["pipeline.unattributed_s"] = acc["unattributed_s"]
 
     text_s = sum(s.duration for s in tagged("operators.extract_text"))
     out["operators.extract_text.busy_s"] = text_s
@@ -309,7 +308,7 @@ def per_layer(spans, jobs_by_span, samples: dict, values: dict) -> dict:
             out[f"{group}.{key}"] = counts[key]
 
     out["bench.traced_op_s"] = values.get("op_s", 0.0)
-    for key in ("peak_rss_mb", "docs_per_s", "call_p50_ms"):
+    for key in ("peak_rss_mb", "docs_per_s", "call_ms"):
         out[f"bench.{key}"] = values.get(key, 0.0)
     return out
 

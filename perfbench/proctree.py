@@ -60,14 +60,14 @@ def _tree(root: int) -> list[int]:
     return out
 
 
-def tree_rss_bytes(root: int) -> int:
-    return sum(_rss_bytes(pid) for pid in _tree(root))
+def tree_rss_bytes() -> int:
+    return sum(_rss_bytes(pid) for pid in _tree(os.getpid()))
 
 
-def tree_cpu_seconds(root: int | None = None) -> float:
-    """CPU seconds the tree under ``root`` (default: this process) has
-    used so far, live processes plus the reaped ones."""
-    return sum(_cpu_ticks(pid) for pid in _tree(root or os.getpid())) / CLOCK_TICKS
+def tree_cpu_seconds() -> float:
+    """CPU seconds this process's tree has used so far, live processes
+    plus the reaped ones."""
+    return sum(_cpu_ticks(pid) for pid in _tree(os.getpid())) / CLOCK_TICKS
 
 
 def host_cpu_ticks() -> tuple[int, int]:
@@ -78,19 +78,19 @@ def host_cpu_ticks() -> tuple[int, int]:
 
 
 class PeakRss:
-    """Samples the tree's RSS every ``interval`` seconds until stopped."""
+    """Samples the tree's RSS every ``INTERVAL`` seconds until stopped."""
 
-    def __init__(self, root: int | None = None, interval: float = 0.25):
-        self.root = root or os.getpid()
-        self.interval = interval
+    INTERVAL = 0.25
+
+    def __init__(self):
         self.peak = 0
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._loop, daemon=True)
 
     def _loop(self) -> None:
         while not self._stop.is_set():
-            self.peak = max(self.peak, tree_rss_bytes(self.root))
-            self._stop.wait(self.interval)
+            self.peak = max(self.peak, tree_rss_bytes())
+            self._stop.wait(self.INTERVAL)
 
     def __enter__(self):
         self._thread.start()
@@ -99,5 +99,5 @@ class PeakRss:
     def __exit__(self, *exc):
         self._stop.set()
         self._thread.join(timeout=5)
-        self.peak = max(self.peak, tree_rss_bytes(self.root))
+        self.peak = max(self.peak, tree_rss_bytes())
         return False

@@ -163,16 +163,14 @@ class Tracer:
         self._patches.append((owner, attr, original))
         setattr(owner, attr, replacement)
 
-    def wrap_call(self, owner, attr: str, name: str, attrs_fn=None) -> None:
-        """Open span ``name`` around every call of ``owner.attr``.
-        ``attrs_fn(args, kwargs)`` may add span attributes."""
+    def wrap_call(self, owner, attr: str, name: str) -> None:
+        """Open span ``name`` around every call of ``owner.attr``."""
         original = getattr(owner, attr)
         tracer = self
 
         @functools.wraps(original)
         def wrapper(*args, **kwargs):
-            extra = attrs_fn(args, kwargs) if attrs_fn else {}
-            with tracer.span(name, **extra):
+            with tracer.span(name):
                 return original(*args, **kwargs)
 
         self.patch(owner, attr, wrapper)

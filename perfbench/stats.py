@@ -21,6 +21,15 @@ def median(values) -> float:
     return float(statistics.median(values))
 
 
+def geomean(values, floor: float = 0.0) -> float:
+    """Geometric mean, each value raised to at least ``floor`` (a clock's
+    resolution, so that a zero reading does not zero the mean)."""
+    values = [max(float(v), floor) for v in values]
+    if not values:
+        raise ValueError("geometric mean of no samples")
+    return float(statistics.geometric_mean(values))
+
+
 def percentile(values, q: float) -> float:
     """Nearest-rank percentile (q in [0, 100])."""
     ordered = sorted(values)

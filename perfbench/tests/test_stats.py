@@ -32,3 +32,10 @@ def test_quartile_spread_matches_statistics_quantiles():
 def test_quartile_spread_rejects_zero_median():
     with pytest.raises(ValueError):
         stats.quartile_spread([0.0, 0.0, 0.0, 1.0, -1.0])
+
+
+def test_geomean_weighs_every_call_alike_and_floors_zero_readings():
+    assert stats.geomean([1.0, 100.0]) == pytest.approx(10.0)
+    # halving any one of n calls moves the mean by the same factor
+    assert stats.geomean([0.5, 100.0]) == pytest.approx(stats.geomean([1.0, 50.0]))
+    assert stats.geomean([0.0, 4.0], floor=0.01) == pytest.approx(0.2)

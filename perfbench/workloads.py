@@ -41,6 +41,7 @@ class Recorder:
         self.errors: list[str] = []
         self.samples: dict[str, list[float]] = defaultdict(list)
         self.values: dict[str, float] = {}
+        self.timed_s = 0.0  # wall seconds inside timed operations
 
     def op(self, sample: str, fn):
         """Run one timed operation; a raise counts as a failure."""
@@ -53,7 +54,9 @@ class Recorder:
             self.failed += 1
             self.errors.append(f"{sample}: {traceback.format_exc(limit=3)}")
             return None
-        self.samples[sample].append(time.perf_counter() - started)
+        elapsed = time.perf_counter() - started
+        self.timed_s += elapsed
+        self.samples[sample].append(elapsed)
         self.samples[f"{sample}.cpu"].append(proctree.tree_cpu_seconds() - cpu)
         return out
 
@@ -230,38 +233,44 @@ def curate_setup(spark, work_dir: str, seed: int, cache_dir: str) -> dict:
 
 
 def curate_pass(ctx, data: dict, rec: Recorder, index: int) -> None:
-    """One pass of the curation set. Each query's full result is pulled to
-    the driver inside the timed op (``collect()`` prunes no columns, unlike
-    ``count()``) and then compared with its DuckDB twin, untimed."""
+    """One pass of the curation set. Each query runs into a noop sink
+    inside its timed op: unlike ``count()`` it prunes no columns, and
+    unlike ``collect()`` it charges no driver-side deserialization. The
+    result is then collected, untimed, and compared with its DuckDB twin."""
     import __spark_entry__ as entry
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
     cpu = proctree.tree_cpu_seconds()
     started = time.perf_counter()
-    results = {}
+    frames, spans = {}, {}
     for name, layer in CURATE_QUERIES:
         def run(name=name, layer=layer):
-            with rec.tracer.span(layer, query=name) as span:
+            with rec.tracer.span(layer, query=name) as spans[name]:
                 df = queries[name](ctx.spark, data["dir"])
-                rows = df.collect()
-                if span is not None:
-                    span.attrs["rows"] = len(rows)
-            return df.columns, rows
+                df.write.format("noop").mode("overwrite").save()
+            return df
 
-        out = rec.op("curate_query", run)
-        if out is not None:
+        df = rec.op("curate_query", run)
+        if df is not None:
             rec.samples[f"curate.{name}"].append(rec.samples["curate_query"][-1])
-            results[name] = out
+            frames[name] = df
     pass_s = time.perf_counter() - started
     rec.samples["curate_pass"].append(pass_s)
     rec.samples["curate_pass.cpu"].append(proctree.tree_cpu_seconds() - cpu)
     rec.values["docs_written"] = rec.values.get("docs_written", 0) + data["docs"]
     rec.samples["curate_docs_per_s"].append(data["docs"] / pass_s)
-    if "dedup_minhash_docs" in results:
-        rec.samples["minhash_pairs"].append(len(results["dedup_minhash_docs"][1]))
-    for name, (cols, rows) in results.items():
-        reason = checks.oracle_matches(rows, cols, data["dir"], oracles[name])
+    for name, df in frames.items():
+        try:
+            rows = df.collect()
+        except Exception as exc:  # noqa: BLE001 — a failed check is counted
+            rec.check(f"oracle_{name}", False, repr(exc))
+            continue
+        if spans[name] is not None:
+            spans[name].attrs["rows"] = len(rows)
+        if name == "dedup_minhash_docs":
+            rec.samples["minhash_pairs"].append(len(rows))
+        reason = checks.oracle_matches(rows, df.columns, data["dir"], oracles[name])
         rec.check(f"oracle_{name}", reason is None, reason or "")
 
 
